@@ -19,7 +19,11 @@ import graft.functions.{AdcSum, LongArrayDot, MinHashSignature, PolyFingerprint,
   * (The codebook/centroid-carrying expressions — PqAssign, PqDistTables,
   * NearestCentroids, ResidualQ — register per codebook under
   * content-hashed names via [[graft.functions.Native]] and have no
-  * data-free SQL form.)
+  * data-free SQL form. The native aggregates
+  * [[graft.functions.MultiTopKDcg]] and
+  * [[graft.functions.HypothesisPick]] are Column-API only: they carry
+  * constructor parameters and register through `Native.call` on first
+  * use, outside this list.)
   *
   * Two deployment routes, one builder list:
   *   - [[GraftFunctions.registerAll]] — imperative, once per session.

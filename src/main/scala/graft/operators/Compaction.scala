@@ -52,7 +52,7 @@ object Compaction {
     * target-sized set, and return the read-back — the oracle asserts the
     * round trip preserved every row. */
   def compactionOrders(spark: SparkSession, dir: String): DataFrame = {
-    val scratch = s"/tmp/graft_compaction/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    val scratch = graft.TmpPaths.unique("graft_compaction")
     Tables.orders(spark, dir).repartition(64)
       .write.mode("overwrite").parquet(s"$scratch/small")
     compact(spark, s"$scratch/small", s"$scratch/compacted",

@@ -19,8 +19,7 @@ import graft.Tables
   */
 object Formats {
 
-  private def scratch(dir: String, fmt: String) =
-    s"/tmp/graft_formats/${dir.replaceAll("[^A-Za-z0-9]", "_")}/$fmt"
+  private def scratch(fmt: String) = graft.TmpPaths.unique(s"graft_formats_$fmt")
 
   /** Write `df` as `fmt`, read it back with `df`'s schema. */
   def roundtrip(df: DataFrame, fmt: String, path: String,
@@ -37,20 +36,20 @@ object Formats {
       .select("doc_id", "text", "lang", "source", "n_chars")
 
   def jsonlRoundtrip(spark: SparkSession, dir: String): DataFrame =
-    roundtrip(docs(spark, dir), "json", scratch(dir, "jsonl"))
+    roundtrip(docs(spark, dir), "json", scratch("jsonl"))
 
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame =
-    roundtrip(docs(spark, dir), "orc", scratch(dir, "orc"))
+    roundtrip(docs(spark, dir), "orc", scratch("orc"))
 
   /** CSV needs explicit quote/escape discipline for free text. */
   def csvRoundtrip(spark: SparkSession, dir: String): DataFrame =
-    roundtrip(docs(spark, dir), "csv", scratch(dir, "csv"),
+    roundtrip(docs(spark, dir), "csv", scratch("csv"),
       Map("header" -> "true", "quote" -> "\"", "escape" -> "\""))
 
   /** XML (native in Spark 4): rowTag contract + entity-escaping of
     * free text ride inside the gate. */
   def xmlRoundtrip(spark: SparkSession, dir: String): DataFrame =
-    roundtrip(docs(spark, dir), "xml", scratch(dir, "xml"),
+    roundtrip(docs(spark, dir), "xml", scratch("xml"),
       Map("rowTag" -> "doc"))
 
   def oracleSql: String =

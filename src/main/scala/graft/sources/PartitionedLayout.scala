@@ -44,9 +44,6 @@ object PartitionedLayout {
 
   // ---- query-map entry (hash-gated; oracle = orders projection) ----
 
-  private def scratch(dir: String) =
-    s"/tmp/graft_partlayout/${dir.replaceAll("[^A-Za-z0-9]", "_")}"
-
   /** Gated instance: orders written partitioned by priority, read back
     * whole (the layout must be value-lossless, including the
     * directory-encoded column). Partition pruning on this layout is
@@ -54,7 +51,7 @@ object PartitionedLayout {
   def partitionedRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val orders = Tables.orders(spark, dir)
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
-    val path = scratch(dir)
+    val path = graft.TmpPaths.unique("graft_partlayout")
     writePartitioned(orders, path, Seq("o_orderpriority"))
     readPruned(spark, path,
       "o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE, o_orderpriority STRING",
@@ -94,7 +91,7 @@ object PartitionedLayout {
   def partitionOverwrite(spark: SparkSession, dir: String): DataFrame = {
     val orders = Tables.orders(spark, dir)
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
-    val path = scratch(dir) + "_dyn"
+    val path = graft.TmpPaths.unique("graft_partlayout_dyn")
     writePartitioned(orders, path, Seq("o_orderpriority"))
     val batch = orders.filter(col("o_orderpriority") === "1-URGENT")
       .withColumn("o_totalprice", col("o_totalprice") + 1000.0)

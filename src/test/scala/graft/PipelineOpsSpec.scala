@@ -51,9 +51,11 @@ class PipelineOpsSpec extends SparkSpec {
     assert(out.count() == orig.count())
     assert(out.agg(sum(col("o_orderkey"))).as[Long].head() ==
       orig.agg(sum(col("o_orderkey"))).as[Long].head())
-    val scratch = s"/tmp/graft_compaction/${sfDir.replaceAll("[^A-Za-z0-9]", "_")}"
-    assert(Compaction.dataFileCount(spark, s"$scratch/small") == 64)
-    assert(Compaction.dataFileCount(spark, s"$scratch/compacted") == 1)
+    // the read-back lists the compacted dir; the small files sit beside it
+    val compacted = new org.apache.hadoop.fs.Path(out.inputFiles.head).getParent
+    assert(Compaction.dataFileCount(spark,
+      new org.apache.hadoop.fs.Path(compacted.getParent, "small").toString) == 64)
+    assert(Compaction.dataFileCount(spark, compacted.toString) == 1)
   }
 
   test("embed plumbing: dim, unit norm, determinism, batch-size independence") {

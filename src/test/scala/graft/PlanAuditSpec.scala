@@ -119,9 +119,10 @@ class PlanAuditSpec extends SparkSpec {
     // k-row mean table and the 1-row global mean; davies_bouldin's
     // k×k scatter pairing is an inequality join of two k-row frames
     "asha_sweep" -> 1, "cluster_validity" -> 2, "davies_bouldin" -> 2,
-    // ransac scores the fact against the checkpointed H=16-row
-    // hypothesis table — the pass_at_k parameter-bounded expansion
-    // (the priority pass's H-explode hides behind that checkpoint)
+    // ransac scores the cell table against the ≤16-row local hypothesis
+    // frame — the pass_at_k parameter-bounded expansion, and its only
+    // nested loop: hypothesis selection is one HypothesisPick aggregate
+    // collected locally, with no H-explode
     "ransac_line" -> 1,
     // welch_t pairs the k-row (3 return flags) grouped-stats frame with
     // itself under g1 < g2 — the same dimension-sized inequality join

@@ -396,8 +396,12 @@ class Round14Spec extends SparkSpec {
 
   test("ransac: all-vertical data leaves no valid hypothesis") {
     val df = (1 to 10).map(i => (5L, i.toLong)).toDF("x", "y")
-    assert(ml.Ransac.ransacLine(df, "x", "y", tol = 1L)
-      .filter(col("h_best").isNotNull).count() === 0L)
+    assert(ml.Ransac.ransacLine(df, "x", "y", tol = 1L).count() === 0L)
+  }
+
+  test("ransac: empty input returns zero rows") {
+    val df = Seq.empty[(Long, Long)].toDF("x", "y")
+    assert(ml.Ransac.ransacLine(df, "x", "y", tol = 1L).count() === 0L)
   }
 
   // ---- Page's L ----
